@@ -6,10 +6,26 @@ extend the validation engine into the curation ops a 100 TB audio training
 pipeline needs, the same way ops.py does for text (SURVEY.md §2
 "beyond-reference pipeline ops").  Design rules shared with audio.py:
 
-- **One Arrow-batched pandas UDF per decode-requiring op.**  Decode runs
-  once, map-side; the binary column is projected away in the same select,
-  so bytes never reach a shuffle (the north rule's "large binary columns
-  kept off the shuffle path").
+- **One decode kernel per execution shape.**  Every clip is decoded once,
+  map-side, and its bytes never reach a shuffle (the north rule's "large
+  binary columns kept off the shuffle path").  Two kernels own that rule,
+  so no op repeats it:
+  - `pcm_map(df, stages)` is the pcm→pcm `mapInPandas` shape.  A stage is
+    a stage function plus its arguments; the function declares its stat
+    columns with `@_stats` and leaves a clip untouched by returning the
+    array it was given.  The kernel owns the decode and its failure rule,
+    the original-bytes passthrough of untouched clips, the one encode and
+    the codec/sr_hz/dur_ms/stat columns.  Each payload op is a one-stage
+    call; `augment_pipeline` and `repair_pipeline` are stage lists, so
+    fused == chained holds by construction.
+  - `pcm_features(df, inputs, extractors, keep_cols)` is the one-decode
+    scalar `pandas_udf` shape: the extractors' fields form one struct,
+    flattened in the same select that drops the binary column.  Each
+    feature op is a one-extractor call; `qa_features` and
+    `validate_and_extract_audio` are extractor lists.
+  Workers get stage and extractor functions by name and look them up after
+  the package's one path shim (`_package_loader`): never capture a
+  gx_spark callable in a worker closure.
 - **Everything after the UDF is Catalyst.**  Dedup grouping is a plain
   groupBy over a 64-bit fingerprint (xxhash64, JVM-side); at cluster scale
   that is one shuffle of (id, fp) pairs — ~16 bytes/row regardless of
@@ -31,16 +47,261 @@ identical.
 from __future__ import annotations
 
 import os
+import zlib
 from functools import lru_cache
 from math import gcd
-from typing import Any
+from typing import Any, Callable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType, IntegerType, LongType, StructField, StructType)
+
+from . import audio as _audio
+from .audio import _DECODE_SELF, DECODABLE_CODECS
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+# ---------------------------------------------------------------------------
+# the two decode kernels: pcm_map (pcm -> pcm) and pcm_features (pcm -> struct)
+# ---------------------------------------------------------------------------
+
+
+def _decode(b, codec: str, decoded: Any = _DECODE_SELF):
+    """(sr, pcm) of one payload, or None when it is null, its codec has no
+    decoder here, or it does not decode.  `decoded` is a caller's earlier
+    decode of the same payload (None if that failed) and is returned as is,
+    the convention of audio.compute_flags_row."""
+    if b is None or codec not in DECODABLE_CODECS:
+        return None
+    if decoded is not _DECODE_SELF:
+        return decoded
+    try:
+        return _audio.decode_payload(bytes(b), codec)
+    except (ValueError, NotImplementedError):
+        return None
+
+
+def _package_loader() -> Callable[[], Any]:
+    """A function that imports and returns this module on a Python worker.
+
+    A worker does not inherit the sys.path of the process that built the
+    plan, so one started outside the repo cannot import gx_spark by name;
+    the loader puts the repo on the path first.  It is a closure, which cloudpickle ships by value.  A
+    module-level gx_spark function captured by a worker closure is pickled
+    by reference instead, and fails to unpickle before any shim runs."""
+    repo_root = _REPO_ROOT
+
+    def load():
+        import sys
+
+        if repo_root not in sys.path:
+            sys.path.insert(0, repo_root)
+        from gx_spark import audio_ops
+
+        return audio_ops
+
+    return load
+
+
+def _on_worker(name: str, *args):
+    """`audio_ops.<name>(*args, *inputs)` as a function Spark can ship to a
+    worker.  Only `name` and the plain-data `args` are pickled."""
+    load = _package_loader()
+
+    def call(*inputs: pd.Series) -> pd.DataFrame:
+        return getattr(load(), name)(*args, *inputs)
+
+    call.__name__ = name  # the UDF's name in plans
+    return call
+
+
+#: stat kind -> (Spark type, pandas dtype)
+_STAT_TYPES = {
+    "int": (IntegerType(), "Int32"),
+    "long": (LongType(), "Int64"),
+    "double": (DoubleType(), "float64"),
+}
+
+#: stats that rewrite these input columns, when present, instead of adding
+#: a column
+_LABEL_COLS = ("sr_hz", "dur_ms")
+
+
+def _stats(*cols: tuple[str, str]):
+    """Declare the (column, kind) stats a pcm_map stage function reports
+    after its output clip, kind being a key of _STAT_TYPES."""
+    def mark(fn):
+        fn.stats = cols
+        return fn
+
+    return mark
+
+
+def pcm_map(
+    df: DataFrame,
+    stages: list[tuple[Callable, dict]],
+    *,
+    bytes_col: str = "bytes",
+    codec_col: str = "codec",
+    id_col: str | None = None,
+    to_codec: str | None = None,
+) -> DataFrame:
+    """Run pcm→pcm stages over every clip in ONE decode/encode pass: the
+    mapInPandas kernel behind every payload-rewriting op here.
+
+    A stage is (fn, kwargs).  fn is a stage function of this module,
+    called on the worker as fn(pcm, sr, row_id, **kwargs), where row_id
+    is the `id_col` value (None without one).  It returns (y, *stats):
+
+    - y is the clip after the stage.  The very array it was given means
+      "untouched"; None drops the clip like a failed decode.
+    - stats hold one value per column declared with @_stats.  They are
+      appended to the schema in stage order, except sr_hz and dur_ms,
+      which rewrite those input columns when present.  A stage that
+      changes the rate reports it as sr_hz; later stages and the encode
+      use it.
+
+    The kernel owns the rest, the same for every op:
+
+    - one decode per row.  A null payload, a failed decode, or a header
+      rate <= 0 gives null bytes and null stats with the codec kept.
+      Only the decode is guarded: a stage error fails the job.
+    - a clip no stage touched keeps its ORIGINAL bytes and codec;
+    - a touched clip is encoded once, as pcm_s16le WAV.  With `to_codec`
+      every decoded clip is re-encoded in it (the transcode case).
+
+    Map-only: payloads stay inside Arrow batches and never shuffle."""
+    for c in (bytes_col, codec_col, id_col):
+        if c is not None and c not in df.columns:
+            raise ValueError(f"missing column {c!r}")
+    plan = [(fn.__name__, kwargs, getattr(fn, "stats", ()))
+            for fn, kwargs in stages]
+    added = [StructField(c, _STAT_TYPES[kind][0])
+             for _, _, stats in plan for c, kind in stats
+             if c not in _LABEL_COLS]
+    worker = _on_worker("_pcm_map_batches", plan, bytes_col, codec_col,
+                        id_col, to_codec)
+    return df.mapInPandas(
+        worker, schema=StructType(list(df.schema.fields) + added))
+
+
+def _pcm_map_batches(plan, bytes_col, codec_col, id_col, to_codec, batches):
+    """pcm_map's worker loop (runs on the Python worker)."""
+    stages = [(globals()[name], kwargs, [c for c, _ in stats])
+              for name, kwargs, stats in plan]
+    kinds = {c: kind for _, _, stats in plan for c, kind in stats}
+    for pdf in batches:
+        out_bytes: list[bytes | None] = []
+        out_codec: list[str] = []
+        cols: dict[str, list] = {c: [] for c in kinds}
+        ids = pdf[id_col] if id_col else [None] * len(pdf)
+        for rid, b, codec in zip(ids, pdf[bytes_col], pdf[codec_col]):
+            row = dict.fromkeys(kinds)
+            clip = None
+            dec = _decode(b, codec)
+            if dec is not None and dec[0] > 0:
+                sr, clip = dec
+                touched = to_codec is not None
+                for fn, kwargs, names in stages:
+                    y, *vals = fn(clip, sr, rid, **kwargs)
+                    if y is None:
+                        clip = None
+                        break
+                    touched |= y is not clip
+                    clip = y
+                    row.update(zip(names, vals))
+                    sr = row.get("sr_hz") or sr
+            if clip is None:
+                row = dict.fromkeys(kinds)
+                out_bytes.append(None)
+                out_codec.append(codec)
+            elif touched:
+                out_codec.append(to_codec or "pcm_s16le")
+                out_bytes.append(
+                    _audio.encode_payload(clip, sr, out_codec[-1]))
+            else:
+                out_bytes.append(bytes(b))
+                out_codec.append(codec)
+            for c, v in row.items():
+                cols[c].append(v)
+        pdf = pdf.copy()
+        pdf[bytes_col] = out_bytes
+        pdf[codec_col] = out_codec
+        for c, kind in kinds.items():
+            if c in pdf.columns or c not in _LABEL_COLS:
+                pdf[c] = pd.array(cols[c], dtype=_STAT_TYPES[kind][1])
+        yield pdf
+
+
+def pcm_features(
+    df: DataFrame,
+    inputs: list[str],
+    extractors: list[tuple[Callable, dict, str]],
+    keep_cols: list[str] | None = None,
+) -> DataFrame:
+    """Per-clip features from ONE decode, as flat columns after
+    `keep_cols` (default: every column but the payload): the scalar
+    pandas_udf kernel behind every feature op here.  The UDF's struct is
+    flattened in the same select that drops the binary column, so
+    payload bytes never reach a shuffle.
+
+    `inputs` are the UDF's argument columns, payload and codec first.
+    An extractor is (fn, kwargs, ddl).  fn is a row function of this
+    module, called on the worker as fn(*row, decoded=dec, **kwargs) with
+    the row's input values and the kernel's one decode of it (None if it
+    failed, see _decode).  It returns a dict, or a tuple in `ddl` order,
+    holding the `ddl` fields.  A field several extractors report is
+    emitted once, from the last of them."""
+    fields: dict[str, StructField] = {}
+    plan = []
+    for fn, kwargs, ddl in extractors:
+        struct = StructType.fromDDL(ddl)
+        for f in struct.fields:
+            fields.setdefault(f.name, f)
+        plan.append((fn.__name__, kwargs, struct.names))
+    keep = keep_cols if keep_cols is not None else [
+        c for c in df.columns if c != inputs[0]]
+    udf = F.pandas_udf(
+        _on_worker("_pcm_features_batch", plan, list(fields)),
+        StructType(list(fields.values())))
+    feat = udf(*[F.col(c) for c in inputs]).alias("_f")
+    return df.select(*keep, feat).select(
+        *keep, *[F.col(f"_f.{k}").alias(k) for k in fields])
+
+
+def _pcm_features_batch(plan, keys, *series: pd.Series) -> pd.DataFrame:
+    """pcm_features' worker body for one Arrow batch."""
+    extractors = [(globals()[name], kwargs, names)
+                  for name, kwargs, names in plan]
+    cols: dict[str, list] = {k: [] for k in keys}
+    appends = [cols[k].append for k in keys]
+    for row in zip(*series):
+        dec = _decode(row[0], row[1])
+        out: dict[str, Any] = {}
+        for fn, kwargs, names in extractors:
+            r = fn(*row, decoded=dec, **kwargs)
+            out.update(r if isinstance(r, dict) else zip(names, r))
+        for ap, k in zip(appends, keys):
+            ap(out[k])
+    return pd.DataFrame(cols, copy=False)
+
+
+def _with_fp64(df: DataFrame) -> DataFrame:
+    """Replace fp_sig by its 64-bit dedup key, hashed JVM-side.
+    xxhash64(NULL) returns the seed, a real value, so undecodable rows get
+    a null key instead of all colliding on it."""
+    return df.withColumn(
+        "fp64", F.when(F.col("fp_sig").isNotNull(),
+                       F.xxhash64(F.col("fp_sig")))).drop("fp_sig")
+
+
+# ---------------------------------------------------------------------------
+# per-clip acoustic features
+# ---------------------------------------------------------------------------
 
 AUDIO_FEATURES_SCHEMA = (
     "n_samples long, header_sr int, rms_dbfs double, peak double, "
@@ -61,7 +322,7 @@ def compute_features_row(
     silence_dbfs: float = -40.0,
     clip_rail: int = 32000,
     fingerprint: bool = False,
-    decoded: Any = None,
+    decoded: Any = _DECODE_SELF,
 ) -> dict[str, Any]:
     """Acoustic features of one clip payload; None fields on decode failure.
 
@@ -85,20 +346,12 @@ def compute_features_row(
     pipeline computing both features and dedup keys decodes each payload
     exactly once.
     """
-    from .audio import decode_payload
-
     keys = _FEATURE_KEYS + ("fp_sig",) if fingerprint else _FEATURE_KEYS
     out: dict[str, Any] = {k: None for k in keys}
-    if b is None:
+    dec = _decode(b, codec, decoded)
+    if dec is None:
         return out
-    if decoded is not None:
-        # caller already decoded (compute_curation_row's one-decode pass)
-        sr, pcm = decoded
-    else:
-        try:
-            sr, pcm = decode_payload(bytes(b), codec)
-        except (ValueError, NotImplementedError):
-            return out
+    sr, pcm = dec
     if fingerprint:
         out["fp_sig"] = _fingerprint_from_pcm(sr, pcm)
     n = len(pcm)
@@ -141,34 +394,6 @@ def compute_features_row(
     return out
 
 
-def _features_udf(frame_ms: int, silence_dbfs: float, clip_rail: int,
-                  fingerprint: bool):
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keys = _FEATURE_KEYS + ("fp_sig",) if fingerprint else _FEATURE_KEYS
-    schema = AUDIO_FEATURES_SCHEMA + (", fp_sig string" if fingerprint else "")
-
-    @pandas_udf(schema)
-    def audio_features(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_features_row as _cfr
-
-        cols: dict[str, list] = {k: [] for k in keys}
-        appends = [cols[k].append for k in keys]
-        for bb, cc in zip(b, codec):
-            r = _cfr(bb, cc, frame_ms=frame_ms, silence_dbfs=silence_dbfs,
-                     clip_rail=clip_rail, fingerprint=fingerprint)
-            for ap, k in zip(appends, keys):
-                ap(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    return audio_features
-
-
 def extract_audio_features(
     df: DataFrame,
     *,
@@ -190,21 +415,14 @@ def extract_audio_features(
     fingerprint=True adds an fp64 dedup-key column from the same decode
     (one scan serves both feature stats and duplicate grouping).
     """
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    udf = _features_udf(frame_ms, silence_dbfs, clip_rail, fingerprint)
-    feat = udf(F.col(bytes_col), F.col(codec_col)).alias("_f")
-    out_keys = list(_FEATURE_KEYS)
-    projected = df.select(*keep, feat)
-    cols = [F.col(f"_f.{k}").alias(k) for k in out_keys]
-    if fingerprint:
-        # xxhash64(NULL) returns the seed, a real value — guard so
-        # undecodable rows get a null key instead of all colliding on it
-        cols.append(
-            F.when(F.col("_f.fp_sig").isNotNull(),
-                   F.xxhash64(F.col("_f.fp_sig"))).alias("fp64"))
-    return projected.select(*keep, *cols)
+    out = pcm_features(
+        df, [bytes_col, codec_col],
+        [(compute_features_row,
+          dict(frame_ms=frame_ms, silence_dbfs=silence_dbfs,
+               clip_rail=clip_rail, fingerprint=fingerprint),
+          AUDIO_FEATURES_SCHEMA + (", fp_sig string" if fingerprint else ""))],
+        keep_cols)
+    return _with_fp64(out) if fingerprint else out
 
 
 # ---------------------------------------------------------------------------
@@ -217,6 +435,7 @@ def compute_fingerprint_row(
     codec: str,
     frame: int = 512,
     hop: int = 256,
+    decoded: Any = _DECODE_SELF,
 ) -> str | None:
     """Spectral peak signature of one clip; None on decode failure.
 
@@ -228,15 +447,8 @@ def compute_fingerprint_row(
     string embeds the sample rate and frame grid so clips at different
     rates never collide by accident; hashing to 64 bits happens JVM-side
     (xxhash64)."""
-    from .audio import decode_payload
-
-    if b is None:
-        return None
-    try:
-        sr, pcm = decode_payload(bytes(b), codec)
-    except (ValueError, NotImplementedError):
-        return None
-    return _fingerprint_from_pcm(sr, pcm, frame, hop)
+    dec = _decode(b, codec, decoded)
+    return None if dec is None else _fingerprint_from_pcm(*dec, frame, hop)
 
 
 def _fingerprint_from_pcm(
@@ -260,24 +472,9 @@ def _fingerprint_from_pcm(
     return f"{sr}/{frame}:{p1},{p2}|" + ",".join(map(str, peaks.tolist()))
 
 
-def _fingerprint_udf(frame: int, hop: int):
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-
-    @pandas_udf("string")
-    def audio_fp(b: pd.Series, codec: pd.Series) -> pd.Series:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_fingerprint_row as _cfp
-
-        return pd.Series(
-            [_cfp(bb, cc, frame=frame, hop=hop) for bb, cc in zip(b, codec)]
-        )
-
-    return audio_fp
+def _fingerprint_field(b, codec, *, decoded, **kwargs) -> tuple:
+    """fingerprint_audio's extractor: the signature as a one-field row."""
+    return (compute_fingerprint_row(b, codec, decoded=decoded, **kwargs),)
 
 
 def fingerprint_audio(
@@ -293,12 +490,12 @@ def fingerprint_audio(
 
     Output is ~16 bytes/row: only this ever shuffles.  fp64 is xxhash64
     over the signature string (computed JVM-side, not in the UDF)."""
-    udf = _fingerprint_udf(frame, hop)
-    return (
-        df.select(F.col(id_col), udf(F.col(bytes_col), F.col(codec_col)).alias("_sig"))
-        .where(F.col("_sig").isNotNull())
-        .select(id_col, F.xxhash64("_sig").alias("fp64"))
-    )
+    sig = pcm_features(
+        df, [bytes_col, codec_col],
+        [(_fingerprint_field, dict(frame=frame, hop=hop), "fp_sig string")],
+        [id_col])
+    return (sig.where(F.col("fp_sig").isNotNull())
+            .select(id_col, F.xxhash64("fp_sig").alias("fp64")))
 
 
 def audio_dedup_groups(
@@ -367,6 +564,7 @@ def silence_bounds_row(
     codec: str,
     frame_ms: int = 25,
     silence_dbfs: float = -40.0,
+    decoded: Any = _DECODE_SELF,
 ) -> tuple[int | None, int | None, int | None]:
     """(lead_ms, trail_ms, active_ms) of one clip on the frame_ms grid.
 
@@ -375,15 +573,10 @@ def silence_bounds_row(
     frame_ms) joins the trail if silent, else the active span.  An
     all-silent clip reports (dur, 0, 0).  (None, None, None) on decode
     failure."""
-    from .audio import decode_payload
-
-    if b is None:
+    dec = _decode(b, codec, decoded)
+    if dec is None:
         return None, None, None
-    try:
-        sr, pcm = decode_payload(bytes(b), codec)
-    except (ValueError, NotImplementedError):
-        return None, None, None
-    return _bounds_from_pcm(sr, pcm, frame_ms, silence_dbfs)
+    return _bounds_from_pcm(*dec, frame_ms, silence_dbfs)
 
 
 def _bounds_from_pcm(
@@ -430,39 +623,21 @@ def silence_bounds(
 ) -> DataFrame:
     """Per-clip dead-air analysis as flat columns; map-only, binary pruned
     in the same projection (same plan shape as extract_audio_features)."""
-    from pyspark.sql.functions import pandas_udf
+    return pcm_features(
+        df, [bytes_col, codec_col],
+        [(silence_bounds_row,
+          dict(frame_ms=frame_ms, silence_dbfs=silence_dbfs),
+          SILENCE_BOUNDS_SCHEMA)],
+        keep_cols)
 
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    repo_root = _REPO_ROOT
 
-    @pandas_udf(SILENCE_BOUNDS_SCHEMA)
-    def bounds(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import silence_bounds_row as _sbr
-
-        lead, trail, active = [], [], []
-        for bb, cc in zip(b, codec):
-            lo, tr, ac = _sbr(bb, cc, frame_ms=frame_ms,
-                              silence_dbfs=silence_dbfs)
-            lead.append(lo)
-            trail.append(tr)
-            active.append(ac)
-        return pd.DataFrame(
-            {"lead_ms": lead, "trail_ms": trail, "active_ms": active},
-            copy=False)
-
-    feat = bounds(F.col(bytes_col), F.col(codec_col)).alias("_s")
-    return df.select(*keep, feat).select(
-        *keep,
-        F.col("_s.lead_ms").alias("lead_ms"),
-        F.col("_s.trail_ms").alias("trail_ms"),
-        F.col("_s.active_ms").alias("active_ms"),
-    )
+@_stats(("sr_hz", "int"), ("dur_ms", "int"))
+def _trim_stage(pcm, sr, rid, *, frame_ms, silence_dbfs):
+    lo, _tr, ac = _bounds_from_pcm(sr, pcm, frame_ms, silence_dbfs)
+    if lo is None:  # empty clip
+        return (None,)
+    a = int(round(lo * sr / 1000.0))
+    return pcm[a:a + int(round(ac * sr / 1000.0))], sr, ac
 
 
 def trim_silence(
@@ -479,54 +654,10 @@ def trim_silence(
     when present, like resample_audio); undecodable rows pass through with
     null bytes.  An all-silent clip trims to empty bytes (dur_ms 0) so a
     downstream `dur_ms > 0` filter drops it."""
-    out_schema = df.schema
-    repo_root = _REPO_ROOT
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import _bounds_from_pcm as _bfp
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_sr: list[int | None] = []
-            new_dur: list[int | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_sr.append(None)
-                    new_dur.append(None)
-                    continue
-                lo, _tr, ac = _bfp(sr, pcm, frame_ms, silence_dbfs)
-                if lo is None:
-                    new_bytes.append(None)
-                    new_sr.append(None)
-                    new_dur.append(None)
-                    continue
-                a = int(round(lo * sr / 1000.0))
-                z = a + int(round(ac * sr / 1000.0))
-                new_bytes.append(wav_encode(pcm[a:z], sr))
-                new_sr.append(sr)
-                new_dur.append(ac)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if "sr_hz" in pdf.columns:
-                pdf["sr_hz"] = pd.array(new_sr, dtype="Int32")
-            if "dur_ms" in pdf.columns:
-                pdf["dur_ms"] = pd.array(new_dur, dtype="Int32")
-            if codec_col in pdf.columns:
-                pdf[codec_col] = [
-                    "pcm_s16le" if nb is not None else cc
-                    for nb, cc in zip(new_bytes, pdf[codec_col])
-                ]
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+    return pcm_map(
+        df,
+        [(_trim_stage, dict(frame_ms=frame_ms, silence_dbfs=silence_dbfs))],
+        bytes_col=bytes_col, codec_col=codec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -595,6 +726,7 @@ def segment_stats_row(
     frame_ms: int = 25,
     silence_dbfs: float = -40.0,
     min_gap_ms: int = 150,
+    decoded: Any = _DECODE_SELF,
 ) -> tuple[int | None, int | None, int | None]:
     """(n_segments, speech_ms, longest_gap_ms) of one clip payload.
 
@@ -602,14 +734,10 @@ def segment_stats_row(
     included); longest_gap_ms is the longest INTERNAL silence between
     surviving segments (0 with fewer than two).  (None, None, None) on
     decode failure."""
-    from .audio import decode_payload
-
-    if b is None:
+    dec = _decode(b, codec, decoded)
+    if dec is None:
         return None, None, None
-    try:
-        sr, pcm = decode_payload(bytes(b), codec)
-    except (ValueError, NotImplementedError):
-        return None, None, None
+    sr, pcm = dec
     segs = _segments_from_pcm(sr, pcm, frame_ms, silence_dbfs, min_gap_ms)
     if segs is None:
         return None, None, None
@@ -638,39 +766,13 @@ def segment_stats(
     """Per-clip VAD segmentation summary as flat columns — the measurement
     pass of segment_audio.  Map-only, one decode per clip, binary pruned
     in the same projection (the silence_bounds plan shape)."""
-    from pyspark.sql.functions import pandas_udf
-
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    repo_root = _REPO_ROOT
-
-    @pandas_udf(SEGMENT_STATS_SCHEMA)
-    def seg(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import segment_stats_row as _ssr
-
-        ns, sp, gp = [], [], []
-        for bb, cc in zip(b, codec):
-            a, s, g = _ssr(bb, cc, frame_ms=frame_ms,
-                           silence_dbfs=silence_dbfs, min_gap_ms=min_gap_ms)
-            ns.append(a)
-            sp.append(s)
-            gp.append(g)
-        return pd.DataFrame(
-            {"n_segments": ns, "speech_ms": sp, "longest_gap_ms": gp},
-            copy=False)
-
-    feat = seg(F.col(bytes_col), F.col(codec_col)).alias("_g")
-    return df.select(*keep, feat).select(
-        *keep,
-        F.col("_g.n_segments").alias("n_segments"),
-        F.col("_g.speech_ms").alias("speech_ms"),
-        F.col("_g.longest_gap_ms").alias("longest_gap_ms"),
-    )
+    return pcm_features(
+        df, [bytes_col, codec_col],
+        [(segment_stats_row,
+          dict(frame_ms=frame_ms, silence_dbfs=silence_dbfs,
+               min_gap_ms=min_gap_ms),
+          SEGMENT_STATS_SCHEMA)],
+        keep_cols)
 
 
 def segment_audio(
@@ -705,14 +807,11 @@ def segment_audio(
     out_schema = StructType(
         list(df.schema.fields) + [StructField("seg_idx", IntegerType())]
     )
-    repo_root = _REPO_ROOT
+    load = _package_loader()
     cols = list(df.columns)
 
     def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
+        load()
         from gx_spark.audio import decode_payload, wav_encode
         from gx_spark.audio_ops import _segments_from_pcm as _sfp
 
@@ -780,6 +879,11 @@ def normalize_gain_pcm(
     return y, 20.0 * np.log10(gain)
 
 
+@_stats(("gain_db", "double"))
+def _gain_stage(pcm, sr, rid, *, target_dbfs, peak_limit):
+    return normalize_gain_pcm(pcm, target_dbfs, peak_limit)
+
+
 def normalize_gain(
     df: DataFrame,
     *,
@@ -805,50 +909,32 @@ def normalize_gain(
     mapInPandas keeps payloads inside Arrow batches; map-only, no
     shuffle.
     """
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    return pcm_map(
+        df, [(_gain_stage,
+              dict(target_dbfs=target_dbfs, peak_limit=peak_limit))],
+        bytes_col=bytes_col, codec_col=codec_col)
 
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("gain_db", DoubleType())]
-    )
-    repo_root = _REPO_ROOT
-    cols = list(df.columns)
 
-    def _batches(it):
-        import sys
+def speed_perturb_pcm(
+    pcm: np.ndarray, sr: int, factor: float, taps: int = 32
+) -> np.ndarray:
+    """One clip sinc-resampled to sr/factor worth of samples, to be
+    relabeled at sr: exactly round(n / factor) samples (the sinc grid
+    rounding and the n/factor contract disagree only at extreme factors;
+    the odd sample is trimmed or zero-padded)."""
+    n_out = int(round(len(pcm) / factor))
+    y = resample_sinc(pcm, sr, max(1, int(round(sr / factor))), taps=taps)
+    if len(y) > n_out:
+        return y[:n_out]
+    if len(y) < n_out:
+        return np.pad(y, (0, n_out - len(y)))
+    return y
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import normalize_gain_pcm as _ngp
 
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            gains: list[float | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    gains.append(None)
-                    continue
-                y, gdb = _ngp(pcm, target_dbfs, peak_limit)
-                if gdb == 0.0 and y is pcm:  # all-silent passthrough
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                else:
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                gains.append(gdb)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            pdf["gain_db"] = pd.array(gains, dtype="float64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+@_stats(("dur_ms", "int"))
+def _speed_stage(pcm, sr, rid, *, factor, taps):
+    y = speed_perturb_pcm(pcm, sr, factor, taps)
+    return y, int(round(len(y) * 1000.0 / sr))
 
 
 def speed_perturb(
@@ -871,54 +957,22 @@ def speed_perturb(
     present) is recomputed from the new length.  Undecodable rows pass
     through with null bytes.  mapInPandas, map-only — payloads never
     shuffle."""
-    from pyspark.sql.types import StructType
-
     if factor <= 0:
         raise ValueError("factor must be positive")
-    out_schema = StructType(list(df.schema.fields))
-    repo_root = _REPO_ROOT
+    return pcm_map(df, [(_speed_stage, dict(factor=factor, taps=taps))],
+                   bytes_col=bytes_col, codec_col=codec_col)
 
-    def _batches(it):
-        import sys
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import resample_sinc as _rs
+def pad_or_trim_pcm(pcm: np.ndarray, sr: int, target_ms: int) -> np.ndarray:
+    """One clip truncated or zero-padded at the END to exactly
+    sr * target_ms // 1000 samples."""
+    n_t = sr * int(target_ms) // 1000
+    return pcm[:n_t] if len(pcm) >= n_t else np.pad(pcm, (0, n_t - len(pcm)))
 
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            new_dur: list[int | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                    # resample to sr/factor worth of samples, relabel at sr
-                    n_out = int(round(len(pcm) / factor))
-                    y = _rs(pcm, sr, max(1, int(round(sr / factor))),
-                            taps=taps)
-                    # sinc grid rounding and the n/factor contract agree
-                    # except at extreme factors; trim/pad the odd sample
-                    if len(y) > n_out:
-                        y = y[:n_out]
-                    elif len(y) < n_out:
-                        y = np.pad(y, (0, n_out - len(y)))
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                    new_dur.append(int(round(len(y) * 1000.0 / sr)))
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    new_dur.append(None)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            if "dur_ms" in pdf.columns:
-                pdf["dur_ms"] = pd.array(new_dur, dtype="Int32")
-            yield pdf
 
-    return df.mapInPandas(_batches, schema=out_schema)
+@_stats(("dur_ms", "int"))
+def _pad_stage(pcm, sr, rid, *, target_ms):
+    return pad_or_trim_pcm(pcm, sr, target_ms), int(target_ms)
 
 
 def pad_or_trim(
@@ -935,48 +989,10 @@ def pad_or_trim(
     row.  Output re-encodes pcm_s16le at the original sr with dur_ms
     (when present) set to target_ms; undecodable rows pass through with
     null bytes.  mapInPandas, map-only."""
-    from pyspark.sql.types import StructType
-
     if target_ms <= 0:
         raise ValueError("target_ms must be positive")
-    out_schema = StructType(list(df.schema.fields))
-    repo_root = _REPO_ROOT
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            new_dur: list[int | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                    n_t = sr * int(target_ms) // 1000
-                    if len(pcm) >= n_t:
-                        y = pcm[:n_t]
-                    else:
-                        y = np.pad(pcm, (0, n_t - len(pcm)))
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                    new_dur.append(int(target_ms))
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    new_dur.append(None)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            if "dur_ms" in pdf.columns:
-                pdf["dur_ms"] = pd.array(new_dur, dtype="Int32")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+    return pcm_map(df, [(_pad_stage, dict(target_ms=target_ms))],
+                   bytes_col=bytes_col, codec_col=codec_col)
 
 
 def augment_noise_pcm(
@@ -1004,6 +1020,12 @@ def augment_noise_pcm(
     return y, 20.0 * np.log10(target_noise_rms)
 
 
+@_stats(("noise_rms_dbfs", "double"))
+def _noise_stage(pcm, sr, rid, *, snr_db, seed):
+    rng = np.random.default_rng(zlib.crc32(f"{seed}:{rid}".encode("utf-8")))
+    return augment_noise_pcm(pcm, snr_db, rng)
+
+
 def augment_noise(
     df: DataFrame,
     snr_db: float,
@@ -1026,54 +1048,8 @@ def augment_noise(
     bytes, and for all-silent clips, which pass through unchanged — SNR
     vs silence is undefined).  Mixed rows re-encode as pcm_s16le WAV.
     mapInPandas, map-only: payloads never enter a shuffle."""
-    import zlib
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("noise_rms_dbfs", DoubleType())]
-    )
-    repo_root = _REPO_ROOT
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import augment_noise_pcm as _anp
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            floors: list[float | None] = []
-            for rid, bb, cc in zip(pdf[id_col], pdf[bytes_col],
-                                   pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    floors.append(None)
-                    continue
-                rs = zlib.crc32(f"{seed}:{rid}".encode("utf-8"))
-                rng = np.random.default_rng(rs)
-                y, floor = _anp(pcm, snr_db, rng)
-                if floor is None:  # silent passthrough
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                else:
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                floors.append(floor)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            pdf["noise_rms_dbfs"] = pd.array(floors, dtype="float64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+    return pcm_map(df, [(_noise_stage, dict(snr_db=snr_db, seed=seed))],
+                   bytes_col=bytes_col, codec_col=codec_col, id_col=id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1101,41 +1077,12 @@ def transcode_audio(
     embarrassingly-parallel rewrite, and the absence of any shuffle is
     the whole design.
     """
-    from .audio import DECODABLE_CODECS
-
     if to_codec not in DECODABLE_CODECS:
         raise ValueError(
             f"to_codec must be one of {sorted(DECODABLE_CODECS)}, "
             f"got {to_codec!r}")
-    out_schema = df.schema
-    repo_root = _REPO_ROOT
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, encode_payload
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    continue
-                new_bytes.append(encode_payload(pcm, sr, to_codec))
-                new_codec.append(to_codec)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+    return pcm_map(df, [], bytes_col=bytes_col, codec_col=codec_col,
+                   to_codec=to_codec)
 
 
 # ---------------------------------------------------------------------------
@@ -1199,6 +1146,12 @@ def resample_sinc(
     return np.clip(np.rint(y), -32768, 32767).astype(np.int16)
 
 
+@_stats(("sr_hz", "int"), ("dur_ms", "int"))
+def _resample_stage(pcm, sr, rid, *, target_sr, taps):
+    y = resample_sinc(pcm, sr, target_sr, taps=taps)
+    return y, target_sr, int(round(len(y) * 1000.0 / target_sr))
+
+
 def resample_audio(
     df: DataFrame,
     target_sr: int,
@@ -1213,50 +1166,11 @@ def resample_audio(
     stream; rows that fail decode pass through with null bytes (callers
     filter or route them to a violations sink).  Columns other than
     (bytes, sr_hz, dur_ms, codec) are preserved unchanged."""
-    out_schema = df.schema
-    names = [f.name for f in out_schema]
-    for required in (bytes_col, codec_col):
-        if required not in names:
-            raise ValueError(f"missing column {required!r}")
-    repo_root = _REPO_ROOT
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import resample_sinc as _rs
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_sr: list[int | None] = []
-            new_dur: list[int | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                    y = _rs(pcm, sr, target_sr, taps=taps)
-                    new_bytes.append(wav_encode(y, target_sr))
-                    new_sr.append(target_sr)
-                    new_dur.append(int(round(len(y) * 1000.0 / target_sr)))
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_sr.append(None)
-                    new_dur.append(None)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if "sr_hz" in pdf.columns:
-                pdf["sr_hz"] = pd.array(new_sr, dtype="Int32")
-            if "dur_ms" in pdf.columns:
-                pdf["dur_ms"] = pd.array(new_dur, dtype="Int32")
-            if codec_col in pdf.columns:
-                pdf[codec_col] = [
-                    "pcm_s16le" if nb is not None else cc
-                    for nb, cc in zip(new_bytes, pdf[codec_col])
-                ]
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+    if target_sr <= 0:
+        raise ValueError("target_sr must be positive")
+    return pcm_map(
+        df, [(_resample_stage, dict(target_sr=target_sr, taps=taps))],
+        bytes_col=bytes_col, codec_col=codec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1282,7 +1196,7 @@ CURATION_SCHEMA = (
 def compute_curation_row(
     clip_id: str, b: bytes | None, sr: int, dur: int, codec: str,
     transcript: str | None, frame_ms: int = 25, silence_dbfs: float = -40.0,
-    clip_rail: int = 32000,
+    clip_rail: int = 32000, decoded: Any = _DECODE_SELF,
 ) -> dict[str, Any]:
     """Validation flags AND curation features from ONE decode of one clip.
 
@@ -1292,27 +1206,28 @@ def compute_curation_row(
     `decoded` hand-off) and compute_features_row.  Flag fields match the
     audio suite's semantics exactly (same functions); feature fields match
     extract_audio_features; fp_sig is the cross-codec dedup signature."""
-    from .audio import DECODABLE_CODECS, compute_flags_row, decode_payload
-
-    dec = None
-    if b is not None and codec in DECODABLE_CODECS:
-        try:
-            dec = decode_payload(bytes(b), codec)
-        except (ValueError, NotImplementedError):
-            dec = None
+    dec = _decode(b, codec, decoded)
     # opus/unknown-codec/null payloads return from compute_flags_row's
     # early paths without consulting `decoded`, so dec=None is safe there
-    flags = compute_flags_row(clip_id, b, sr, dur, codec, transcript,
-                              decoded=dec)
+    flags = _audio.compute_flags_row(clip_id, b, sr, dur, codec, transcript,
+                                     decoded=dec)
     feats = compute_features_row(
-        b if dec is not None else None, codec, frame_ms=frame_ms,
-        silence_dbfs=silence_dbfs, clip_rail=clip_rail, fingerprint=True,
-        decoded=dec)
+        b, codec, frame_ms=frame_ms, silence_dbfs=silence_dbfs,
+        clip_rail=clip_rail, fingerprint=True, decoded=dec)
     out = {k: flags[k] for k in _CURATION_FLAG_KEYS}
     for k in _CURATION_FEAT_KEYS:
         out[k] = feats[k]
     out["fp_sig"] = feats["fp_sig"]
     return out
+
+
+def _curation_fields(b, codec, clip_id, sr, dur, transcript, *, decoded,
+                     **kwargs) -> dict[str, Any]:
+    """validate_and_extract_audio's extractor (null labels read as 0)."""
+    return compute_curation_row(
+        clip_id, b, int(sr) if sr is not None else 0,
+        int(dur) if dur is not None else 0, codec, transcript,
+        decoded=decoded, **kwargs)
 
 
 def validate_and_extract_audio(
@@ -1347,44 +1262,13 @@ def validate_and_extract_audio(
 
     tests/test_curation_audio.py pins that these verdicts equal the
     decode-in-suite audio_suite() verdicts row for row."""
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keys = _CURATION_FLAG_KEYS + _CURATION_FEAT_KEYS + ("fp_sig",)
-
-    @pandas_udf(CURATION_SCHEMA)
-    def curation(clip_id, b, sr, dur, codec, transcript):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_curation_row as _ccr
-
-        cols: dict[str, list] = {k: [] for k in keys}
-        appends = [cols[k].append for k in keys]
-        for ci, bb, s, d, cc, tx in zip(clip_id, b, sr, dur, codec,
-                                        transcript):
-            r = _ccr(ci, bb, int(s) if s is not None else 0,
-                     int(d) if d is not None else 0, cc, tx,
-                     frame_ms=frame_ms, silence_dbfs=silence_dbfs,
-                     clip_rail=clip_rail)
-            for ap, k in zip(appends, keys):
-                ap(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    feat = curation(
-        F.col(id_col), F.col(bytes_col), F.col(sr_col), F.col(dur_col),
-        F.col(codec_col), F.col(transcript_col),
-    ).alias("_c")
-    projected = df.select(*keep, feat)
-    cols = [F.col(f"_c.{k}").alias(k) for k in keys if k != "fp_sig"]
-    cols.append(
-        F.when(F.col("_c.fp_sig").isNotNull(),
-               F.xxhash64(F.col("_c.fp_sig"))).alias("fp64"))
-    return projected.select(*keep, *cols)
+    return _with_fp64(pcm_features(
+        df, [bytes_col, codec_col, id_col, sr_col, dur_col, transcript_col],
+        [(_curation_fields,
+          dict(frame_ms=frame_ms, silence_dbfs=silence_dbfs,
+               clip_rail=clip_rail),
+          CURATION_SCHEMA)],
+        keep_cols))
 
 
 # ---------------------------------------------------------------------------
@@ -1440,7 +1324,7 @@ def compute_mel_row(
     n_mels: int = 26,
     frame_ms: int = 25,
     hop_ms: int = 10,
-    decoded: Any = None,
+    decoded: Any = _DECODE_SELF,
 ) -> dict[str, Any]:
     """Log-mel filterbank statistics of one clip; None fields on decode
     failure.  Frames are `frame_ms` long with `hop_ms` hop (the 25/10
@@ -1454,19 +1338,12 @@ def compute_mel_row(
                     (first index on ties), None when n_frames == 0
     - mel_mean_db:  10*log10(grand mean mel energy), None for silence
     """
-    from .audio import decode_payload
-
     out: dict[str, Any] = {k: None for k in _MEL_KEYS}
     out["n_mels"] = int(n_mels)
-    if b is None:
+    dec = _decode(b, codec, decoded)
+    if dec is None:
         return out
-    if decoded is not None:
-        sr, pcm = decoded
-    else:
-        try:
-            sr, pcm = decode_payload(bytes(b), codec)
-        except (ValueError, NotImplementedError):
-            return out
+    sr, pcm = dec
     n = len(pcm)
     out["n_samples"] = n
     if sr <= 0:
@@ -1513,35 +1390,12 @@ def mel_features(
     (a clip whose dominant band sits at the top filter of its labeled
     Nyquist is upsampled narrowband — content above the original Nyquist
     is absent)."""
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keys = _MEL_KEYS
-
-    @pandas_udf(MEL_FEATURES_SCHEMA)
-    def mel_stats(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_mel_row as _cmr
-
-        cols: dict[str, list] = {k: [] for k in keys}
-        appends = [cols[k].append for k in keys]
-        for bb, cc in zip(b, codec):
-            r = _cmr(bb, cc, n_mels=n_mels, frame_ms=frame_ms,
-                     hop_ms=hop_ms)
-            for ap, k in zip(appends, keys):
-                ap(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    feat = mel_stats(F.col(bytes_col), F.col(codec_col)).alias("_m")
-    projected = df.select(*keep, feat)
-    return projected.select(
-        *keep, *[F.col(f"_m.{k}").alias(k) for k in keys])
+    return pcm_features(
+        df, [bytes_col, codec_col],
+        [(compute_mel_row,
+          dict(n_mels=n_mels, frame_ms=frame_ms, hop_ms=hop_ms),
+          MEL_FEATURES_SCHEMA)],
+        keep_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -1575,6 +1429,7 @@ def compute_mfcc_row(
     n_mels: int = 26,
     frame_ms: int = 25,
     hop_ms: int = 10,
+    decoded: Any = _DECODE_SELF,
 ) -> dict[str, Any]:
     """Per-clip MFCC summary: frame the clip exactly as compute_mel_row
     (25/10 periodic Hann, pow-2 FFT, HTK triangular bank), take
@@ -1582,16 +1437,12 @@ def compute_mfcc_row(
     coefficients, report the frame-mean of c0/c1/c2 — the cepstral
     summary used for corpus banding (c0 tracks log energy, c1/c2 spectral
     tilt/compactness).  None fields on decode failure / empty clip."""
-    from .audio import decode_payload
-
     out: dict[str, Any] = {k: None for k in _MFCC_KEYS}
     out["n_mfcc"] = int(n_mfcc)
-    if b is None:
+    dec = _decode(b, codec, decoded)
+    if dec is None:
         return out
-    try:
-        sr, pcm = decode_payload(bytes(b), codec)
-    except (ValueError, NotImplementedError):
-        return out
+    sr, pcm = dec
     n = len(pcm)
     out["n_samples"] = n
     if sr <= 0:
@@ -1631,35 +1482,13 @@ def mfcc_features(
     """Per-clip MFCC summary as flat columns; map-only, one Arrow-batched
     decode, binary pruned in the same select (the mel_features shape) —
     only scalar cepstral summaries ever shuffle."""
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keys = _MFCC_KEYS
-
-    @pandas_udf(MFCC_FEATURES_SCHEMA)
-    def mfcc_stats(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_mfcc_row as _cmr
-
-        cols: dict[str, list] = {k: [] for k in keys}
-        appends = [cols[k].append for k in keys]
-        for bb, cc in zip(b, codec):
-            r = _cmr(bb, cc, n_mfcc=n_mfcc, n_mels=n_mels,
-                     frame_ms=frame_ms, hop_ms=hop_ms)
-            for ap, k in zip(appends, keys):
-                ap(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    feat = mfcc_stats(F.col(bytes_col), F.col(codec_col)).alias("_c")
-    projected = df.select(*keep, feat)
-    return projected.select(
-        *keep, *[F.col(f"_c.{k}").alias(k) for k in keys])
+    return pcm_features(
+        df, [bytes_col, codec_col],
+        [(compute_mfcc_row,
+          dict(n_mfcc=n_mfcc, n_mels=n_mels, frame_ms=frame_ms,
+               hop_ms=hop_ms),
+          MFCC_FEATURES_SCHEMA)],
+        keep_cols)
 
 
 def augment_pipeline(
@@ -1714,10 +1543,6 @@ def augment_pipeline(
     given); undecodable rows pass through with null bytes.  mapInPandas,
     map-only — payloads never shuffle, and never cross Arrow more than
     once each way."""
-    import zlib
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     if speed is not None and speed <= 0:
         raise ValueError("speed must be positive")
     if tempo is not None and tempo <= 0:
@@ -1727,98 +1552,21 @@ def augment_pipeline(
     if (snr_db is None and tempo is None and speed is None
             and target_ms is None and reverb_gain is None):
         raise ValueError("enable at least one stage")
-    fields = list(df.schema.fields)
+    stages: list[tuple[Callable, dict]] = []
+    if reverb_gain is not None:
+        stages.append((_reverb_stage, dict(
+            seed=seed, kind=reverb_kind, rt60_ms=float(rt60_ms),
+            delay_ms=float(reverb_delay_ms), gain=float(reverb_gain))))
     if snr_db is not None:
-        fields = fields + [StructField("noise_rms_dbfs", DoubleType())]
-    out_schema = StructType(fields)
-    repo_root = _REPO_ROOT
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import augment_noise_pcm as _anp
-        from gx_spark.audio_ops import make_rir as _mkr
-        from gx_spark.audio_ops import resample_sinc as _rs
-        from gx_spark.audio_ops import reverb_pcm as _rvp
-        from gx_spark.audio_ops import tempo_stretch_pcm as _ts
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            new_dur: list[int | None] = []
-            floors: list[float | None] = []
-            for rid, bb, cc in zip(pdf[id_col], pdf[bytes_col],
-                                   pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    new_dur.append(None)
-                    floors.append(None)
-                    continue
-                floor = None
-                reencoded = False
-                if reverb_gain is not None and reverb_gain > 0.0:
-                    rng = np.random.default_rng(
-                        zlib.crc32(f"{seed}:rir:{rid}".encode("utf-8")))
-                    h = _mkr(sr, kind=reverb_kind, rt60_ms=rt60_ms,
-                             delay_ms=reverb_delay_ms, gain=reverb_gain,
-                             rng=rng)
-                    pcm = _rvp(pcm, h)
-                    reencoded = True
-                if snr_db is not None:
-                    rng = np.random.default_rng(
-                        zlib.crc32(f"{seed}:{rid}".encode("utf-8")))
-                    pcm, floor = _anp(pcm, snr_db, rng)
-                    reencoded = floor is not None
-                dur: int | None = None
-                if tempo is not None:
-                    # the chained tempo_stretch re-encodes even at 1.0;
-                    # mirror it so fused == chained stays bit-identical
-                    pcm = _ts(pcm, sr, tempo)
-                    dur = int(round(len(pcm) * 1000.0 / sr))
-                    reencoded = True
-                if speed is not None:
-                    n_out = int(round(len(pcm) / speed))
-                    pcm = _rs(pcm, sr, max(1, int(round(sr / speed))),
-                              taps=taps)
-                    if len(pcm) > n_out:
-                        pcm = pcm[:n_out]
-                    elif len(pcm) < n_out:
-                        pcm = np.pad(pcm, (0, n_out - len(pcm)))
-                    dur = int(round(len(pcm) * 1000.0 / sr))
-                    reencoded = True
-                if target_ms is not None:
-                    n_t = sr * int(target_ms) // 1000
-                    pcm = pcm[:n_t] if len(pcm) >= n_t else np.pad(
-                        pcm, (0, n_t - len(pcm)))
-                    dur = int(target_ms)
-                    reencoded = True
-                if reencoded:
-                    new_bytes.append(wav_encode(pcm, sr))
-                    new_codec.append("pcm_s16le")
-                else:  # silent noise-only passthrough keeps original bytes
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                new_dur.append(dur)
-                floors.append(floor)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            if "dur_ms" in pdf.columns and (
-                    tempo is not None or speed is not None
-                    or target_ms is not None):
-                pdf["dur_ms"] = pd.array(new_dur, dtype="Int32")
-            if snr_db is not None:
-                pdf["noise_rms_dbfs"] = pd.array(floors, dtype="float64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+        stages.append((_noise_stage, dict(snr_db=snr_db, seed=seed)))
+    if tempo is not None:
+        stages.append((_tempo_stage, dict(factor=tempo)))
+    if speed is not None:
+        stages.append((_speed_stage, dict(factor=speed, taps=taps)))
+    if target_ms is not None:
+        stages.append((_pad_stage, dict(target_ms=target_ms)))
+    return pcm_map(df, stages, bytes_col=bytes_col, codec_col=codec_col,
+                   id_col=id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1840,7 +1588,7 @@ def compute_spectral_row(
     b: bytes | None,
     codec: str,
     rolloff_pct: float = 0.85,
-    decoded: Any = None,
+    decoded: Any = _DECODE_SELF,
 ) -> dict[str, Any]:
     """Whole-clip spectral shape of one clip; None fields on decode
     failure or an all-zero clip.  One periodic-Hann-windowed rFFT on the
@@ -1856,18 +1604,11 @@ def compute_spectral_row(
     - spectral_flatness:     exp(mean(ln P)) / mean(P)  (Wiener entropy;
                              ~0 tonal, ->1 white)
     """
-    from .audio import decode_payload
-
     out: dict[str, Any] = {k: None for k in _SPECTRAL_KEYS}
-    if b is None:
+    dec = _decode(b, codec, decoded)
+    if dec is None:
         return out
-    if decoded is not None:
-        sr, pcm = decoded
-    else:
-        try:
-            sr, pcm = decode_payload(bytes(b), codec)
-        except (ValueError, NotImplementedError):
-            return out
+    sr, pcm = dec
     n = len(pcm)
     out["n_samples"] = n
     if sr <= 0 or n < 2:
@@ -1909,34 +1650,11 @@ def spectral_features(
     vs the labeled Nyquist catches upsampled narrowband audio, and
     zcr/centroid are the cheap per-clip summaries quality gates band
     on."""
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keys = _SPECTRAL_KEYS
-
-    @pandas_udf(SPECTRAL_FEATURES_SCHEMA)
-    def spec_stats(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_spectral_row as _csr
-
-        cols: dict[str, list] = {k: [] for k in keys}
-        appends = [cols[k].append for k in keys]
-        for bb, cc in zip(b, codec):
-            r = _csr(bb, cc, rolloff_pct=rolloff_pct)
-            for ap, k in zip(appends, keys):
-                ap(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    feat = spec_stats(F.col(bytes_col), F.col(codec_col)).alias("_s")
-    projected = df.select(*keep, feat)
-    return projected.select(
-        *keep, *[F.col(f"_s.{k}").alias(k) for k in keys])
+    return pcm_features(
+        df, [bytes_col, codec_col],
+        [(compute_spectral_row, dict(rolloff_pct=rolloff_pct),
+          SPECTRAL_FEATURES_SCHEMA)],
+        keep_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -1960,7 +1678,7 @@ def compute_pitch_row(
     frame_ms: int = 40,
     hop_ms: int = 20,
     voiced_threshold: float = 0.5,
-    decoded: Any = None,
+    decoded: Any = _DECODE_SELF,
 ) -> dict[str, Any]:
     """Framewise autocorrelation F0 of one clip (the classic ACF pitch
     tracker: Rabiner 1977, "On the use of autocorrelation analysis for
@@ -1977,18 +1695,11 @@ def compute_pitch_row(
     - f0_median_hz:     median F0 over voiced frames (None if none)
     - periodicity_mean: mean over ALL frames (voicing confidence)
     """
-    from .audio import decode_payload
-
     out: dict[str, Any] = {k: None for k in _PITCH_KEYS}
-    if b is None:
+    dec = _decode(b, codec, decoded)
+    if dec is None:
         return out
-    if decoded is not None:
-        sr, pcm = decoded
-    else:
-        try:
-            sr, pcm = decode_payload(bytes(b), codec)
-        except (ValueError, NotImplementedError):
-            return out
+    sr, pcm = dec
     n = len(pcm)
     out["n_samples"] = n
     if sr <= 0 or not (0 < fmin < fmax <= sr / 2.0):
@@ -2051,35 +1762,13 @@ def pitch_features(
     bands speakers, and periodicity_mean is the cheap voicing-confidence
     gate — all per-clip scalars, so the corpus-level groupBy that bands
     on them never touches payload bytes."""
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keys = _PITCH_KEYS
-
-    @pandas_udf(PITCH_FEATURES_SCHEMA)
-    def pitch_stats(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_pitch_row as _cpr
-
-        cols: dict[str, list] = {k: [] for k in keys}
-        appends = [cols[k].append for k in keys]
-        for bb, cc in zip(b, codec):
-            r = _cpr(bb, cc, fmin=fmin, fmax=fmax, frame_ms=frame_ms,
-                     hop_ms=hop_ms, voiced_threshold=voiced_threshold)
-            for ap, k in zip(appends, keys):
-                ap(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    feat = pitch_stats(F.col(bytes_col), F.col(codec_col)).alias("_p")
-    projected = df.select(*keep, feat)
-    return projected.select(
-        *keep, *[F.col(f"_p.{k}").alias(k) for k in keys])
+    return pcm_features(
+        df, [bytes_col, codec_col],
+        [(compute_pitch_row,
+          dict(fmin=fmin, fmax=fmax, frame_ms=frame_ms, hop_ms=hop_ms,
+               voiced_threshold=voiced_threshold),
+          PITCH_FEATURES_SCHEMA)],
+        keep_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -2183,7 +1872,7 @@ def compute_loudness_row(
     codec: str,
     block_ms: int = 400,
     hop_ms: int = 100,
-    decoded: Any = None,
+    decoded: Any = _DECODE_SELF,
 ) -> dict[str, Any]:
     """Programme loudness of one clip per ITU-R BS.1770-4 (mono channel,
     weight 1.0); None fields on decode failure or when the clip is
@@ -2203,18 +1892,11 @@ def compute_loudness_row(
     -3.01 LUFS at any sample rate — the -0.691 offset cancels the
     K-weighting cascade's gain at 997 Hz.
     """
-    from .audio import decode_payload
-
     out: dict[str, Any] = {k: None for k in _LOUDNESS_KEYS}
-    if b is None:
+    dec = _decode(b, codec, decoded)
+    if dec is None:
         return out
-    if decoded is not None:
-        sr, pcm = decoded
-    else:
-        try:
-            sr, pcm = decode_payload(bytes(b), codec)
-        except (ValueError, NotImplementedError):
-            return out
+    sr, pcm = dec
     n = len(pcm)
     out["n_samples"] = n
     if sr <= 0:
@@ -2264,34 +1946,11 @@ def loudness_features(
     dead air, and the integrated/momentary gap flags bursty content.
     All per-clip scalars — downstream banding never touches payload
     bytes."""
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keys = _LOUDNESS_KEYS
-
-    @pandas_udf(LOUDNESS_FEATURES_SCHEMA)
-    def loudness_stats(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_loudness_row as _clr
-
-        cols: dict[str, list] = {k: [] for k in keys}
-        appends = [cols[k].append for k in keys]
-        for bb, cc in zip(b, codec):
-            r = _clr(bb, cc, block_ms=block_ms, hop_ms=hop_ms)
-            for ap, k in zip(appends, keys):
-                ap(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    feat = loudness_stats(F.col(bytes_col), F.col(codec_col)).alias("_l")
-    projected = df.select(*keep, feat)
-    return projected.select(
-        *keep, *[F.col(f"_l.{k}").alias(k) for k in keys])
+    return pcm_features(
+        df, [bytes_col, codec_col],
+        [(compute_loudness_row, dict(block_ms=block_ms, hop_ms=hop_ms),
+          LOUDNESS_FEATURES_SCHEMA)],
+        keep_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -2361,6 +2020,11 @@ def declip_pcm(
     return y, n_clip, 20.0 * np.log10(gain)
 
 
+@_stats(("n_clipped", "long"), ("declip_gain_db", "double"))
+def _declip_stage(pcm, sr, rid, *, rail_frac, out_peak):
+    return declip_pcm(pcm, rail_frac, out_peak)
+
+
 def declip_audio(
     df: DataFrame,
     *,
@@ -2382,56 +2046,9 @@ def declip_audio(
     undecodable rows pass through with null bytes (the trim_silence
     convention).  mapInPandas keeps payloads inside Arrow batches;
     map-only, no shuffle."""
-    from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType)
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField("n_clipped", LongType()),
-           StructField("declip_gain_db", DoubleType())]
-    )
-    repo_root = _REPO_ROOT
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import declip_pcm as _dcp
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            counts: list[int | None] = []
-            gains: list[float | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    counts.append(None)
-                    gains.append(None)
-                    continue
-                y, n_clip, gdb = _dcp(pcm, rail_frac, out_peak)
-                if n_clip == 0:
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                else:
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                counts.append(n_clip)
-                gains.append(gdb)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            pdf["n_clipped"] = pd.array(counts, dtype="Int64")
-            pdf["declip_gain_db"] = pd.array(gains, dtype="float64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+    return pcm_map(
+        df, [(_declip_stage, dict(rail_frac=rail_frac, out_peak=out_peak))],
+        bytes_col=bytes_col, codec_col=codec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2495,17 +2112,14 @@ def channel_stats(
     validation/feature pipeline runs."""
     from pyspark.sql.functions import pandas_udf
 
-    repo_root = _REPO_ROOT
+    load = _package_loader()
     keep = keep_cols if keep_cols is not None else [
         c for c in df.columns if c != bytes_col
     ]
 
     @pandas_udf(AUDIO_CHANNELS_SCHEMA)
     def _chan(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
+        load()
         from gx_spark.audio_ops import compute_channel_row as _ccr
 
         cols: dict[str, list] = {k: [] for k in _CHANNEL_KEYS}
@@ -2544,13 +2158,10 @@ def downmix_audio(
     out_schema = StructType(
         list(df.schema.fields) + [StructField("n_channels_in", IntegerType())]
     )
-    repo_root = _REPO_ROOT
+    load = _package_loader()
 
     def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
+        load()
         from gx_spark.audio import (WAV_FRAMED_CODECS, payload_channels,
                                     wav_decode_multi, wav_encode)
 
@@ -2613,7 +2224,7 @@ def compute_electrical_row(
     *,
     mains: tuple[float, ...] = (50.0, 60.0),
     n_harmonics: int = 3,
-    decoded: Any = None,
+    decoded: Any = _DECODE_SELF,
 ) -> dict[str, Any]:
     """Electrical-defect facts for one clip, from one decode:
 
@@ -2631,18 +2242,11 @@ def compute_electrical_row(
     DC is removed before the hum probe so a big offset cannot leak into
     the low bins.  Undecodable or all-silent clips report nulls (their
     ratio is undefined)."""
-    from .audio import DECODABLE_CODECS, decode_payload
-
     out: dict[str, Any] = {k: None for k in _ELECTRICAL_KEYS}
-    if decoded is not None:
-        sr, pcm = decoded
-    else:
-        if b is None or codec not in DECODABLE_CODECS:
-            return out
-        try:
-            sr, pcm = decode_payload(bytes(b), codec)
-        except (ValueError, NotImplementedError):
-            return out
+    dec = _decode(b, codec, decoded)
+    if dec is None:
+        return out
+    sr, pcm = dec
     n = len(pcm)
     if n == 0 or sr <= 0:
         return out
@@ -2684,34 +2288,31 @@ def electrical_features(
     """Per-clip DC offset + mains-hum columns (compute_electrical_row);
     map-only, binary pruned in the same projection — the recording-chain
     QA pass of an audio corpus."""
-    from pyspark.sql.functions import pandas_udf
+    return pcm_features(
+        df, [bytes_col, codec_col],
+        [(compute_electrical_row,
+          dict(mains=tuple(float(m) for m in mains),
+               n_harmonics=int(n_harmonics)),
+          AUDIO_ELECTRICAL_SCHEMA)],
+        keep_cols)
 
-    repo_root = _REPO_ROOT
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    mains_t = tuple(float(m) for m in mains)
-    nh = int(n_harmonics)
 
-    @pandas_udf(AUDIO_ELECTRICAL_SCHEMA)
-    def _elec(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
+def remove_dc_pcm(
+    pcm: np.ndarray, min_frac: float = 0.001
+) -> tuple[np.ndarray, int]:
+    """Subtract one clip's rounded mean sample value, saturating at the
+    int16 rails.  Returns (pcm, the subtracted value); an offset below
+    min_frac of full scale comes back UNTOUCHED (same array object, 0)."""
+    dc = int(np.rint(np.mean(pcm))) if len(pcm) else 0
+    if abs(dc) < min_frac * 32768.0:
+        return pcm, 0
+    return np.clip(pcm.astype(np.int32) - dc, -32768, 32767).astype(
+        np.int16), dc
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_electrical_row as _cer
 
-        cols: dict[str, list] = {k: [] for k in _ELECTRICAL_KEYS}
-        for bb, cc in zip(b, codec):
-            r = _cer(bb, cc, mains=mains_t, n_harmonics=nh)
-            for k in _ELECTRICAL_KEYS:
-                cols[k].append(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    feat = _elec(F.col(bytes_col), F.col(codec_col)).alias("_e")
-    projected = df.select(*keep, feat)
-    return projected.select(
-        *keep, *[F.col(f"_e.{k}").alias(k) for k in _ELECTRICAL_KEYS])
+@_stats(("dc_removed", "int"))
+def _dc_stage(pcm, sr, rid, *, min_frac):
+    return remove_dc_pcm(pcm, min_frac)
 
 
 def remove_dc_offset(
@@ -2731,56 +2332,8 @@ def remove_dc_offset(
     Output schema = input schema + (dc_removed int: the subtracted
     sample value, 0 for passthrough, null for undecodable).  Map-only,
     no shuffle."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("dc_removed", IntegerType())]
-    )
-    repo_root = _REPO_ROOT
-    thr = float(min_frac)
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            removed: list[int | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                if bb is None:
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    removed.append(None)
-                    continue
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    removed.append(None)
-                    continue
-                dc = int(np.rint(np.mean(pcm))) if len(pcm) else 0
-                if abs(dc) < thr * 32768.0:
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                    removed.append(0)
-                    continue
-                y = np.clip(pcm.astype(np.int32) - dc,
-                            -32768, 32767).astype(np.int16)
-                new_bytes.append(wav_encode(y, sr))
-                new_codec.append("pcm_s16le")
-                removed.append(dc)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            pdf[codec_col] = new_codec
-            pdf["dc_removed"] = pd.array(removed, dtype="Int32")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+    return pcm_map(df, [(_dc_stage, dict(min_frac=float(min_frac)))],
+                   bytes_col=bytes_col, codec_col=codec_col)
 
 
 def remove_hum_pcm(
@@ -2841,6 +2394,14 @@ def remove_hum_pcm(
     return y, float(best_ratio)
 
 
+@_stats(("hum_removed_ratio", "double"))
+def _hum_stage(pcm, sr, rid, *, mains, n_harmonics, min_ratio, notch_hz):
+    return remove_hum_pcm(
+        pcm, sr, mains=tuple(float(m) for m in mains),
+        n_harmonics=int(n_harmonics), min_ratio=float(min_ratio),
+        notch_hz=float(notch_hz))
+
+
 def remove_hum(
     df: DataFrame,
     *,
@@ -2859,57 +2420,10 @@ def remove_hum(
     clips keep their ORIGINAL bytes and codec; repaired clips re-encode
     pcm_s16le; undecodable rows pass through with null bytes (the
     declip/trim convention).  Map-only, no shuffle."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField("hum_removed_ratio", DoubleType())]
-    )
-    repo_root = _REPO_ROOT
-    mains_t = tuple(float(m) for m in mains)
-    nh, mr, nz = int(n_harmonics), float(min_ratio), float(notch_hz)
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import remove_hum_pcm as _rhp
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            ratios: list[float | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                if bb is None:
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    ratios.append(None)
-                    continue
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    ratios.append(None)
-                    continue
-                y, ratio = _rhp(pcm, sr, mains=mains_t, n_harmonics=nh,
-                                min_ratio=mr, notch_hz=nz)
-                if y is pcm:
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                else:
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                ratios.append(ratio)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            pdf[codec_col] = new_codec
-            pdf["hum_removed_ratio"] = pd.array(ratios, dtype="float64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+    return pcm_map(
+        df, [(_hum_stage, dict(mains=mains, n_harmonics=n_harmonics,
+                               min_ratio=min_ratio, notch_hz=notch_hz))],
+        bytes_col=bytes_col, codec_col=codec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2977,6 +2491,19 @@ def reverb_pcm(pcm: np.ndarray, h: np.ndarray) -> np.ndarray:
     return np.clip(np.rint(y * 32768.0), -32768, 32767).astype(np.int16)
 
 
+def _reverb_stage(pcm, sr, rid, *, seed, **rir):
+    # ":rir:" keeps the RIR stream independent of the noise stream an
+    # augment_noise(seed=...) chain would draw
+    rng = np.random.default_rng(
+        zlib.crc32(f"{seed}:rir:{rid}".encode("utf-8")))
+    h = make_rir(sr, rng=rng, **rir)
+    if len(h) == 1:  # identity RIR (gain <= 0)
+        return (pcm,)
+    y = reverb_pcm(pcm, h)
+    # an empty clip comes back as is but still counts as convolved
+    return (y.copy() if y is pcm else y),
+
+
 def augment_reverb(
     df: DataFrame,
     *,
@@ -3002,65 +2529,16 @@ def augment_reverb(
     pass through with wet_db null.  Convolved rows re-encode pcm_s16le;
     duration is preserved (full convolution trimmed to n).  mapInPandas,
     map-only: payloads never enter a shuffle."""
-    import zlib
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("reverb_wet_db", DoubleType())]
-    )
-    repo_root = _REPO_ROOT
-    params = dict(kind=kind, rt60_ms=float(rt60_ms),
-                  delay_ms=float(delay_ms), gain=float(gain))
-    wet_db = 20.0 * np.log10(gain) if gain > 0.0 else None
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import make_rir as _mk
-        from gx_spark.audio_ops import reverb_pcm as _rp
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            wets: list[float | None] = []
-            for rid, bb, cc in zip(pdf[id_col], pdf[bytes_col],
-                                   pdf[codec_col]):
-                if bb is None:
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    wets.append(None)
-                    continue
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    wets.append(None)
-                    continue
-                # ":rir:" keeps the RIR stream independent of the noise
-                # stream an augment_noise(seed=...) chain would draw
-                rng = np.random.default_rng(
-                    zlib.crc32(f"{seed}:rir:{rid}".encode("utf-8")))
-                h = _mk(sr, rng=rng, **params)
-                if len(h) == 1:
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                    wets.append(None)
-                    continue
-                new_bytes.append(wav_encode(_rp(pcm, h), sr))
-                new_codec.append("pcm_s16le")
-                wets.append(wet_db)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            pdf[codec_col] = new_codec
-            pdf["reverb_wet_db"] = pd.array(wets, dtype="float64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+    out = pcm_map(
+        df, [(_reverb_stage, dict(
+            seed=seed, kind=kind, rt60_ms=float(rt60_ms),
+            delay_ms=float(delay_ms), gain=float(gain)))],
+        bytes_col=bytes_col, codec_col=codec_col, id_col=id_col)
+    # one wet level per call: every decoded row (non-null bytes) carries it
+    wet_db = float(20.0 * np.log10(gain)) if gain > 0.0 else None
+    return out.withColumn(
+        "reverb_wet_db",
+        F.when(F.col(bytes_col).isNotNull(), F.lit(wet_db)).cast("double"))
 
 
 # ---------------------------------------------------------------------------
@@ -3225,7 +2703,7 @@ def pack_clips(
             "bin",
             F.expr(f"(_poff + _pcum - _ptok) div {T}").cast("long"))
     )
-    repo_root = _REPO_ROOT
+    load = _package_loader()
     gap = int(gap_ms)
     with_stratum = stratify_col is not None
     with_tx = transcript_col is not None
@@ -3235,10 +2713,7 @@ def pack_clips(
     drop_bad = bool(skip_bad)
 
     def _flush(s, b, ids, members):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
+        load()
         from gx_spark.audio import decode_payload, wav_encode
         from gx_spark.audio_ops import resample_sinc as _rs
 
@@ -3391,6 +2866,12 @@ def tempo_stretch_pcm(
     return np.clip(np.rint(y), -32768, 32767).astype(np.int16)
 
 
+@_stats(("dur_ms", "int"))
+def _tempo_stage(pcm, sr, rid, *, factor):
+    y = tempo_stretch_pcm(pcm, sr, factor)
+    return y, int(round(len(y) * 1000.0 / sr))
+
+
 def tempo_stretch(
     df: DataFrame,
     factor: float,
@@ -3406,45 +2887,10 @@ def tempo_stretch(
     rows pass through with null bytes.  mapInPandas, map-only — payloads
     never shuffle, the same embarrassingly-parallel shape as every other
     augmentation here."""
-    from pyspark.sql.types import StructType
-
     if factor <= 0:
         raise ValueError("factor must be positive")
-    out_schema = StructType(list(df.schema.fields))
-    repo_root = _REPO_ROOT
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import tempo_stretch_pcm as _ts
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            new_dur: list[int | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                    y = _ts(pcm, sr, factor)
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                    new_dur.append(int(round(len(y) * 1000.0 / sr)))
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    new_dur.append(None)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            if "dur_ms" in pdf.columns:
-                pdf["dur_ms"] = pd.array(new_dur, dtype="Int32")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+    return pcm_map(df, [(_tempo_stage, dict(factor=factor))],
+                   bytes_col=bytes_col, codec_col=codec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -3504,7 +2950,7 @@ def specaugment(
 
     if not (0 < n_mels and max_freq_bands * freq_masks < n_mels):
         raise ValueError("freq masks must not cover every band")
-    repo_root = _REPO_ROOT
+    load = _package_loader()
     keeps = list(keep_cols or [])
     # build output schema from kept input fields + the feature columns
     from pyspark.sql.types import StructType
@@ -3514,10 +2960,7 @@ def specaugment(
     out_schema = StructType(kept_fields + list(feat.fields))
 
     def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
+        load()
         from gx_spark.audio import decode_payload
 
         for pdf in it:
@@ -3620,13 +3063,10 @@ def cmvn_partials(
     out_schema = StructType(
         kept + list(StructType.fromDDL(CMVN_PARTIAL_SCHEMA).fields))
     keeps = [f.name for f in kept]
-    repo_root = _REPO_ROOT
+    load = _package_loader()
 
     def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
+        load()
         from gx_spark.audio import decode_payload
 
         for pdf in it:
@@ -3773,6 +3213,12 @@ def declick_pcm(
     return out, int(len(hits))
 
 
+@_stats(("n_clicks", "long"))
+def _declick_stage(pcm, sr, rid, *, thr_frac):
+    y, k = declick_pcm(pcm, thr_frac)
+    return (y if k else pcm), k
+
+
 def declick_audio(
     df: DataFrame,
     *,
@@ -3790,48 +3236,8 @@ def declick_audio(
     re-encode pcm_s16le; undecodable rows pass through with null bytes
     (the trim_silence convention).  mapInPandas, map-only — payloads
     never shuffle."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("n_clicks", LongType())])
-    repo_root = _REPO_ROOT
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import declick_pcm as _dcp
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            counts: list[int | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    counts.append(None)
-                    continue
-                y, k = _dcp(pcm, thr_frac)
-                if k == 0:
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                else:
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                counts.append(k)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            pdf["n_clicks"] = pd.array(counts, dtype="Int64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+    return pcm_map(df, [(_declick_stage, dict(thr_frac=thr_frac))],
+                   bytes_col=bytes_col, codec_col=codec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -3886,6 +3292,10 @@ def denoise_pcm(
     return np.clip(np.rint(y), -32768, 32767).astype(np.int16)
 
 
+def _denoise_stage(pcm, sr, rid, **kwargs):
+    return (denoise_pcm(pcm, sr, **kwargs),)
+
+
 def denoise_audio(
     df: DataFrame,
     *,
@@ -3901,40 +3311,10 @@ def denoise_audio(
     pcm_s16le at its original length; undecodable rows pass through
     with null bytes (the trim_silence convention).  mapInPandas,
     map-only — payloads never shuffle."""
-    from pyspark.sql.types import StructType
-
-    out_schema = StructType(list(df.schema.fields))
-    repo_root = _REPO_ROOT
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import denoise_pcm as _dnp
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    continue
-                y = _dnp(pcm, sr, noise_quantile=noise_quantile,
-                         oversub=oversub, floor_gain=floor_gain)
-                new_bytes.append(wav_encode(y, sr))
-                new_codec.append("pcm_s16le")
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+    return pcm_map(
+        df, [(_denoise_stage, dict(noise_quantile=noise_quantile,
+                                   oversub=oversub, floor_gain=floor_gain))],
+        bytes_col=bytes_col, codec_col=codec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -3982,133 +3362,30 @@ def repair_pipeline(
     n_clicks long, hum_removed_ratio double — denoise adds none and
     always re-encodes).  Undecodable rows pass through with null bytes
     and null stats.  mapInPandas, map-only — payloads never shuffle."""
-    from pyspark.sql.types import (
-        DoubleType, IntegerType, LongType, StructField, StructType)
-
-    fields = list(df.schema.fields)
-    if dc:
-        fields.append(StructField("dc_removed", IntegerType()))
-    if declip:
-        fields += [StructField("n_clipped", LongType()),
-                   StructField("declip_gain_db", DoubleType())]
-    if declick:
-        fields.append(StructField("n_clicks", LongType()))
-    if hum:
-        fields.append(StructField("hum_removed_ratio", DoubleType()))
     if not (dc or declip or declick or hum or denoise):
         raise ValueError("enable at least one stage")
-    out_schema = StructType(fields)
-    repo_root = _REPO_ROOT
-    mains_t = tuple(float(m) for m in mains)
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import declick_pcm as _dkp
-        from gx_spark.audio_ops import declip_pcm as _dcp
-        from gx_spark.audio_ops import denoise_pcm as _dnp
-        from gx_spark.audio_ops import remove_hum_pcm as _rhp
-
-        for pdf in it:
-            nb: list = []
-            ncod: list = []
-            stats: dict[str, list] = {
-                "dc_removed": [], "n_clipped": [], "declip_gain_db": [],
-                "n_clicks": [], "hum_removed_ratio": []}
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    if bb is None:
-                        raise ValueError("null payload")
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    nb.append(None)
-                    ncod.append(cc)
-                    for k in stats:
-                        stats[k].append(None)
-                    continue
-                acted = False
-                dcv = 0
-                if dc:
-                    m = int(np.rint(np.mean(pcm))) if len(pcm) else 0
-                    if abs(m) >= dc_min_frac * 32768.0:
-                        pcm = np.clip(pcm.astype(np.int32) - m,
-                                      -32768, 32767).astype(np.int16)
-                        dcv = m
-                        acted = True
-                stats["dc_removed"].append(dcv)
-                n_clip, gdb = 0, 0.0
-                if declip:
-                    y, n_clip, g = _dcp(pcm, rail_frac, out_peak)
-                    if n_clip:
-                        pcm, gdb = y, g
-                        acted = True
-                stats["n_clipped"].append(n_clip)
-                stats["declip_gain_db"].append(gdb)
-                kk = 0
-                if declick:
-                    y, kk = _dkp(pcm, click_thr_frac)
-                    if kk:
-                        pcm = y
-                        acted = True
-                stats["n_clicks"].append(kk)
-                ratio = None
-                if hum:
-                    y, ratio = _rhp(pcm, sr, mains=mains_t,
-                                    n_harmonics=int(n_harmonics),
-                                    min_ratio=float(hum_min_ratio),
-                                    notch_hz=float(notch_hz))
-                    if y is not pcm:
-                        pcm = y
-                        acted = True
-                stats["hum_removed_ratio"].append(ratio)
-                if denoise:
-                    pcm = _dnp(pcm, sr, noise_quantile=noise_quantile,
-                               oversub=oversub, floor_gain=floor_gain)
-                    acted = True
-                if acted:
-                    nb.append(wav_encode(pcm, sr))
-                    ncod.append("pcm_s16le")
-                else:
-                    nb.append(bytes(bb))
-                    ncod.append(cc)
-            pdf = pdf.copy()
-            pdf[bytes_col] = nb
-            pdf[codec_col] = ncod
-            if dc:
-                pdf["dc_removed"] = pd.array(
-                    stats["dc_removed"], dtype="Int32")
-            if declip:
-                pdf["n_clipped"] = pd.array(
-                    stats["n_clipped"], dtype="Int64")
-                pdf["declip_gain_db"] = pd.array(
-                    stats["declip_gain_db"], dtype="float64")
-            if declick:
-                pdf["n_clicks"] = pd.array(
-                    stats["n_clicks"], dtype="Int64")
-            if hum:
-                pdf["hum_removed_ratio"] = pd.array(
-                    stats["hum_removed_ratio"], dtype="float64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+    stages: list[tuple[Callable, dict]] = []
+    if dc:
+        stages.append((_dc_stage, dict(min_frac=float(dc_min_frac))))
+    if declip:
+        stages.append((_declip_stage,
+                       dict(rail_frac=rail_frac, out_peak=out_peak)))
+    if declick:
+        stages.append((_declick_stage, dict(thr_frac=click_thr_frac)))
+    if hum:
+        stages.append((_hum_stage, dict(
+            mains=mains, n_harmonics=n_harmonics, min_ratio=hum_min_ratio,
+            notch_hz=notch_hz)))
+    if denoise:
+        stages.append((_denoise_stage, dict(
+            noise_quantile=noise_quantile, oversub=oversub,
+            floor_gain=floor_gain)))
+    return pcm_map(df, stages, bytes_col=bytes_col, codec_col=codec_col)
 
 
 # ---------------------------------------------------------------------------
 # fused QA features: loudness + pitch + electrical from ONE decode
 # ---------------------------------------------------------------------------
-
-QA_FEATURES_SCHEMA = (
-    "n_samples long, n_blocks long, lufs_integrated double, "
-    "lufs_momentary_max double, gated_block_frac double, "
-    "n_frames long, voiced_frac double, f0_median_hz double, "
-    "periodicity_mean double, dc_frac double, hum_ratio double, "
-    "hum_base_hz double")
-
-_QA_KEYS = tuple(p.strip().split(" ")[0]
-                 for p in QA_FEATURES_SCHEMA.split(","))
 
 
 def qa_features(
@@ -4128,58 +3405,13 @@ def qa_features(
     24.7 s separate, both in BENCH), not the ~2x the decode-dominated
     feature/fingerprint fusion gets — the win here is one pipeline
     stage and one pass over the table.  Column values are IDENTICAL to
-    the standalone ops'
-    (same row functions via their `decoded=` hand-off, test-pinned).
-    Map-only, binary pruned in the same select — no shuffle."""
-    from pyspark.sql.types import StructType
-
-    kept = [f for f in df.schema.fields if f.name in (keep_cols or [])]
-    out_schema = StructType(
-        list(kept) + list(StructType.fromDDL(QA_FEATURES_SCHEMA).fields))
-    keeps = [f.name for f in kept]
-    repo_root = _REPO_ROOT
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload
-        from gx_spark.audio_ops import (
-            compute_electrical_row,
-            compute_loudness_row,
-            compute_pitch_row,
-        )
-
-        for pdf in it:
-            cols: dict[str, list] = {k: [] for k in _QA_KEYS}
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                dec = None
-                if bb is not None:
-                    try:
-                        dec = decode_payload(bytes(bb), cc)
-                    except (ValueError, NotImplementedError, TypeError):
-                        dec = None
-                if dec is None:
-                    for k in _QA_KEYS:
-                        cols[k].append(None)
-                    continue
-                # pass the real bytes too: the row functions' null/codec
-                # early paths run before consulting `decoded`
-                lr = compute_loudness_row(bb, cc, decoded=dec)
-                pr = compute_pitch_row(bb, cc, decoded=dec)
-                er = compute_electrical_row(bb, cc, decoded=dec)
-                merged = {**lr, **pr, **er}
-                for k in _QA_KEYS:
-                    cols[k].append(merged.get(k))
-            out = pdf[keeps].copy() if keeps else pd.DataFrame(
-                index=pdf.index)
-            for k in _QA_KEYS:
-                out[k] = cols[k]
-            yield out
-
-    sel = list(keeps)
-    for c in (bytes_col, codec_col):
-        if c not in sel:
-            sel.append(c)
-    return df.select(*sel).mapInPandas(_batches, schema=out_schema)
+    the standalone ops': this op is their three extractors in one
+    pcm_features call.  keep_cols defaults to none, and kept columns
+    come in input order.  Map-only, binary pruned in the same select —
+    no shuffle."""
+    return pcm_features(
+        df, [bytes_col, codec_col],
+        [(compute_loudness_row, {}, LOUDNESS_FEATURES_SCHEMA),
+         (compute_pitch_row, {}, PITCH_FEATURES_SCHEMA),
+         (compute_electrical_row, {}, AUDIO_ELECTRICAL_SCHEMA)],
+        [c for c in df.columns if c in (keep_cols or [])])
