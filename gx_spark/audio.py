@@ -299,6 +299,10 @@ def wav_decode_multi(b: bytes) -> tuple[int, int, np.ndarray]:
         cid = b[pos : pos + 4]
         (clen,) = struct.unpack("<I", b[pos + 4 : pos + 8])
         body = b[pos + 8 : pos + 8 + clen]
+        if cid in (b"fmt ", b"fact") and len(body) < clen:
+            # stream cut inside a header chunk: struct.error would escape
+            # every decode guard and fail the whole job
+            raise ValueError(f"truncated {cid.decode().strip()} chunk")
         if cid == b"fmt ":
             if clen < 16:
                 raise ValueError("short fmt chunk")

@@ -2,16 +2,29 @@
 
 The reference's Checkpoint (ref: checkpoint/checkpoint.py#Checkpoint.run)
 orchestrates validate→store-result→actions per batch; ours is the scaled
-equivalent: a per-partition loop with a durable manifest so a killed
+equivalent: per-partition validation with a durable manifest so a killed
 spark-submit job restarts only unvalidated partitions.
+
+Concurrency: the pending partitions run at once on a driver thread pool of
+min(pending, sc.defaultParallelism) workers, because one partition's scan
+may not fill the cores (a parquet row group is one task; a binary-heavy
+audio file is often a single row group).  Workers inherit the caller's job
+group, local properties and tags.  With a transform and extra outputs, up
+to defaultParallelism transformed partitions are cached at once.  The
+manifest and the actions stay on the calling thread:
+`validated_partitions` comes back in provider order, `partition_validated`
+events fire in completion order.  On a failure, partitions not yet started
+are cancelled, running ones finish (and are marked done if they succeed),
+and the first exception is re-raised; the failed partition stays pending.
 
 Manifest: append-only JSONL log at <results_dir>/_checkpoint_manifest.json,
 one line per (snapshot_id, partition_id) status change (last line wins;
 fsync per mark; torn tail lines ignored on load) — O(1) I/O per partition
 instead of a full-document rewrite, so a 10k-partition run writes O(P)
-manifest bytes.  Legacy whole-dict JSON manifests are migrated in place.  Validation outputs append to
-<results_dir>/_validation_results and <results_dir>/_violations parquet
-tables (partition lineage columns included in every row).
+manifest bytes.  Legacy whole-dict JSON manifests are migrated in place.
+Validation outputs append to <results_dir>/_validation_results and
+<results_dir>/_violations parquet tables (partition lineage columns
+included in every row).
 """
 
 from __future__ import annotations
@@ -19,9 +32,11 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass
 from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -167,87 +182,135 @@ class CheckpointRunner:
     def run(self, run_id: str | None = None, max_partitions: int | None = None) -> CheckpointResult:
         """Validate every not-yet-done partition of the current snapshot.
 
-        `max_partitions` bounds the number validated in this invocation —
-        used by tests to simulate a killed job; a subsequent run() resumes
-        exactly where the previous one stopped."""
+        The pending partitions (provider order, done ones skipped, at most
+        `max_partitions` — tests use it to simulate a killed job; a later
+        run() resumes where this one stopped) run concurrently on
+        min(pending, sc.defaultParallelism) pool workers, each inheriting
+        the caller's job group, local properties and tags.  With
+        `transform` and `extra_outputs` set, that many transformed
+        partitions may be cached at once.  The calling thread marks a
+        partition pending as it submits it, and marks it done and fires
+        `partition_validated` as it completes (completion order);
+        `validated_partitions` is in provider order.  On the first failure
+        the partitions not yet started are cancelled, the running ones
+        finish (marked done if they succeed), and the exception is
+        re-raised: a resume re-runs exactly the failed partition."""
         run_id = run_id or uuid.uuid4().hex[:12]
         snapshot = self.provider.snapshot_id()
         df = self.provider.load(self.spark)
-        parts = self.provider.partitions(self.spark)
-        validated, skipped = [], []
-        all_success = True
-        done_count = 0
-        for p in parts:
+        todo, skipped = [], []
+        for p in self.provider.partitions(self.spark):
             if self.manifest.is_done(snapshot, p.partition_id):
                 skipped.append(p.partition_id)
-                continue
-            if max_partitions is not None and done_count >= max_partitions:
+            elif max_partitions is not None and len(todo) >= max_partitions:
                 break
-            self.manifest.mark(snapshot, p.partition_id, "pending", run_id)
-            # partition predicate pushes down into the parquet/Iceberg scan
-            pdf = df.filter(p.predicate)
-            persisted_tdf = None
-            if self.transform is not None:
-                pdf = self.transform(pdf)
-                if self.extra_outputs:
-                    # one materialization of the transformed partition
-                    # serves the suite AND every extra write — the
-                    # expensive transform (audio decode) runs once
-                    persisted_tdf = pdf.persist()
-                    pdf = persisted_tdf
-            bundle = ValidationRun(
-                self.spark, self.suite, self.options, self.tables
-            ).validate(pdf, run_id=run_id, partition_id=p.partition_id,
-                       snapshot_id=snapshot)
-            # Exactly-once on resume: each (snapshot, partition) writes to a
-            # deterministic hive-style subpath with OVERWRITE, so a job killed
-            # after the write but before manifest.mark('done') re-runs the
-            # partition idempotently — no double-counted appends.  The
-            # key=value dirs are recovered as partition columns on read.
-            sub = f"snapshot_id={snapshot}/partition_id={p.partition_id}"
-            rdf = bundle.results_df(self.spark).drop("snapshot_id", "partition_id")
-            rdf.write.mode("overwrite").parquet(
-                os.path.join(self.results_dir, "_validation_results", sub)
-            )
-            n_rows = len(self.suite.expectations)
-            vt = bundle.violations_table()
-            if vt is not None:
-                vt.write.mode("overwrite").parquet(
-                    os.path.join(self.results_dir, "_violations", sub)
-                )
-            for name, fn in self.extra_outputs.items():
-                fn(pdf).write.mode("overwrite").parquet(
-                    os.path.join(self.results_dir, name, sub)
-                )
-            bundle.unpersist()
-            if persisted_tdf is not None:
-                persisted_tdf.unpersist()
-            all_success = all_success and bundle.success
-            self.manifest.mark(snapshot, p.partition_id, "done", run_id, n_rows)
-            validated.append(p.partition_id)
-            done_count += 1
-            if self.actions:
-                from .actions import fire_actions
-
-                fire_actions(self.actions, {
+            else:
+                todo.append(p)
+        n_rows = len(self.suite.expectations)
+        successes: dict[int, bool] = {}
+        first_exc: BaseException | None = None
+        pool = ThreadPoolExecutor(
+            max(1, min(len(todo), self.spark.sparkContext.defaultParallelism)),
+            thread_name_prefix="gx-checkpoint")
+        try:
+            futures = {}
+            for p in todo:
+                self.manifest.mark(snapshot, p.partition_id, "pending", run_id)
+                futures[pool.submit(self._inheriting(self._validate_partition),
+                                    df, p, snapshot, run_id)] = p.partition_id
+            for fut in as_completed(futures):
+                if fut.cancelled():
+                    continue
+                if fut.exception() is not None:
+                    if first_exc is None:
+                        first_exc = fut.exception()
+                        for f in futures:
+                            f.cancel()
+                    continue
+                pid = futures[fut]
+                successes[pid] = fut.result()
+                self.manifest.mark(snapshot, pid, "done", run_id, n_rows)
+                self._fire({
                     "event": "partition_validated",
                     "run_id": run_id, "snapshot_id": snapshot,
-                    "partition_id": p.partition_id,
+                    "partition_id": pid,
                     "suite_name": self.suite.name,
-                    "success": bundle.success,
+                    "success": successes[pid],
                     "n_expectations": n_rows,
                 })
+        finally:
+            pool.shutdown(wait=True, cancel_futures=True)
+        if first_exc is not None:
+            raise first_exc
+        validated = [p.partition_id for p in todo]
+        all_success = all(successes.values())
+        self._fire({
+            "event": "run_end", "run_id": run_id,
+            "snapshot_id": snapshot, "suite_name": self.suite.name,
+            "success": all_success,
+            "validated_partitions": list(validated),
+            "skipped_partitions": list(skipped),
+        })
+        return CheckpointResult(run_id, snapshot, validated, skipped, all_success)
+
+    def _validate_partition(self, df: DataFrame, p: PartitionRef,
+                            snapshot: str, run_id: str) -> bool:
+        """One partition: filter, transform, validate, write; returns the
+        suite verdict.  Runs on a pool worker."""
+        # partition predicate pushes down into the parquet/Iceberg scan
+        pdf = df.filter(p.predicate)
+        persisted_tdf = None
+        if self.transform is not None:
+            pdf = self.transform(pdf)
+            if self.extra_outputs:
+                # one materialization of the transformed partition
+                # serves the suite AND every extra write — the
+                # expensive transform (audio decode) runs once
+                persisted_tdf = pdf.persist()
+                pdf = persisted_tdf
+        bundle = ValidationRun(
+            self.spark, self.suite, self.options, self.tables
+        ).validate(pdf, run_id=run_id, partition_id=p.partition_id,
+                   snapshot_id=snapshot)
+        # Exactly-once on resume: each (snapshot, partition) writes to a
+        # deterministic hive-style subpath with OVERWRITE, so a job killed
+        # after the write but before manifest.mark('done') re-runs the
+        # partition idempotently — no double-counted appends.  The
+        # key=value dirs are recovered as partition columns on read.
+        sub = f"snapshot_id={snapshot}/partition_id={p.partition_id}"
+        rdf = bundle.results_df(self.spark).drop("snapshot_id", "partition_id")
+        rdf.write.mode("overwrite").parquet(
+            os.path.join(self.results_dir, "_validation_results", sub)
+        )
+        vt = bundle.violations_table()
+        if vt is not None:
+            vt.write.mode("overwrite").parquet(
+                os.path.join(self.results_dir, "_violations", sub)
+            )
+        for name, fn in self.extra_outputs.items():
+            fn(pdf).write.mode("overwrite").parquet(
+                os.path.join(self.results_dir, name, sub)
+            )
+        bundle.unpersist()
+        if persisted_tdf is not None:
+            persisted_tdf.unpersist()
+        return bundle.success
+
+    def _inheriting(self, fn):
+        """`fn` carrying the caller's local properties and tags to the
+        thread that runs it.  Wrap once per submit: each worker then gets
+        its own copy of the properties (Spark SQL sets the execution id in
+        them, so two workers must not share one)."""
+        wrap = inheritable_thread_target(self.spark)
+        # without pinned threads PySpark returns the session itself: there
+        # are no per-thread properties to carry
+        return wrap(fn) if callable(wrap) else fn
+
+    def _fire(self, payload: dict) -> None:
         if self.actions:
             from .actions import fire_actions
 
-            fire_actions(self.actions, {
-                "event": "run_end", "run_id": run_id,
-                "snapshot_id": snapshot, "suite_name": self.suite.name,
-                "success": all_success,
-                "validated_partitions": list(validated),
-                "skipped_partitions": list(skipped),
-            })
-        return CheckpointResult(run_id, snapshot, validated, skipped, all_success)
+            fire_actions(self.actions, payload)
 
     def results(self) -> DataFrame:
         return self.spark.read.option("basePath",

@@ -24,6 +24,7 @@ lists in the plan.
 
 from __future__ import annotations
 
+import threading
 from typing import Any
 
 from pyspark.sql import Column
@@ -155,6 +156,9 @@ class ExistInTable:
         return finalize
 
 
+_BATCH_VIEW_LOCK = threading.Lock()
+
+
 @register_expectation("expect_query_to_return_no_rows")
 class QueryReturnsNoRows:
     """QueryExpectation (ref: expectations/expectation.py#QueryExpectation):
@@ -165,8 +169,12 @@ class QueryReturnsNoRows:
         query = cfg.kwargs["query"]
 
         def metric(df) -> dict[str, Any]:
-            df.createOrReplaceTempView("batch")
-            out = df.sparkSession.sql(query)
+            # `batch` is one session-wide name: hold it from registration
+            # until sql() has analyzed (and so bound) the query, or a
+            # concurrent validate (checkpoint workers) could swap it
+            with _BATCH_VIEW_LOCK:
+                df.createOrReplaceTempView("batch")
+                out = df.sparkSession.sql(query)
             rows = out.limit(21).collect()
             n = out.count() if len(rows) > 20 else len(rows)
             return {"unexpected_count": n,
